@@ -347,12 +347,38 @@ def overwrite_table_parameters(
 
 # -------------------------------------------------------------- partitions
 
+def _sql_string(value: str) -> str:
+    """``value`` as a SQL string literal: backslash and quote escaped, so
+    a partition value like ``it's`` survives the DDL."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _partition_spec(columns: List[str], values: List[str]) -> str:
-    return ", ".join(f"`{c}`='{v}'" for c, v in zip(columns, values))
+    return ", ".join(f"`{c}`={_sql_string(v)}" for c, v in zip(columns, values))
 
 
 def _partition_columns(database: str, table: str, spark: SparkSession) -> List[str]:
     return [c.name for c in spark.catalog.listColumns(table, dbName=database) if c.isPartition]
+
+
+def _add_partitions(
+    database: str,
+    table: str,
+    columns: List[str],
+    partitions_values: Dict[str, List[str]],
+    spark: SparkSession,
+) -> None:
+    """Register every {location: spec values} entry with ONE
+    ``ALTER TABLE … ADD IF NOT EXISTS PARTITION … LOCATION …`` statement
+    (the command batches metastore RPCs itself)."""
+    if not partitions_values:
+        return
+    clauses = " ".join(
+        f"PARTITION ({_partition_spec(columns, values)}) "
+        f"LOCATION {_sql_string(normalize_path(location))}"
+        for location, values in partitions_values.items()
+    )
+    spark.sql(f"ALTER TABLE {_qualified(database, table)} ADD IF NOT EXISTS {clauses}")
 
 
 def add_parquet_partitions(
@@ -364,13 +390,9 @@ def add_parquet_partitions(
     """Register partition locations: {partition_dir_uri: [values...]}.
     Ref: /root/reference/awswrangler/catalog/_add.py ``add_parquet_partitions``."""
     spark = _active_spark(spark)
-    part_cols = _partition_columns(database, table, spark)
-    for location, values in partitions_values.items():
-        spec = _partition_spec(part_cols, values)
-        spark.sql(
-            f"ALTER TABLE {_qualified(database, table)} ADD IF NOT EXISTS "
-            f"PARTITION ({spec}) LOCATION '{normalize_path(location)}'"
-        )
+    _add_partitions(
+        database, table, _partition_columns(database, table, spark), partitions_values, spark
+    )
 
 
 # CSV partitions are identical DDL; format is a table property.
@@ -421,7 +443,12 @@ def delete_all_partitions(database: str, table: str, spark: Optional[SparkSessio
 
 
 def repair_table_partitions(database: str, table: str, spark: Optional[SparkSession] = None) -> None:
-    """MSCK REPAIR — discover hive-layout partition dirs into the catalog."""
+    """MSCK REPAIR — discover hive-layout partition dirs into the catalog.
+
+    Dataset writes (``s3.to_parquet`` and its csv/json/orc twins)
+    register only the partitions they wrote and never run this; call it
+    to pick up partitions written some other way (another writer, a
+    copy, a table re-created over existing data)."""
     _active_spark(spark).sql(f"MSCK REPAIR TABLE {_qualified(database, table)}")
 
 

@@ -548,9 +548,10 @@ def minhash_lsh_incremental(
 def release_batch_state(result: DataFrame, blocking: bool = False) -> int:
     """Release the per-batch caches behind a ``minhash_lsh_incremental``
     result (batch-side shingles, candidate pairs, and — when the corpus
-    state was derived inline — the corpus shingle cache), or behind a
+    state was derived inline — the corpus shingle cache), behind a
     ``ngram_jaccard_pairs`` / ``containment_pairs`` result (the shared
-    ``_shingle_overlap`` shingle cache).
+    ``_shingle_overlap`` shingle cache), or behind a ``minhash_lsh_pairs``
+    result (shingles, band rows and candidate pairs).
 
     The production ingest loop is: build ``minhash_corpus_state`` once
     → per batch run ``minhash_lsh_incremental(corpus_state=...)``,
@@ -700,7 +701,7 @@ def minhash_lsh_pairs(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union_sz = F.size("sh_a") + F.size("sh_b") - inter
-    return (
+    out = (
         paired.select(
             "id_a",
             "id_b",
@@ -708,6 +709,10 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
+    # same hygiene contract as ngram_jaccard_pairs: the three caches
+    # backing the returned plan, for release_batch_state
+    out._sg_batch_caches = [shingles, band_rows, candidates]
+    return out
 
 
 def duplicated_spans(

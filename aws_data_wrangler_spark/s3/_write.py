@@ -1,4 +1,4 @@
-"""Dataset writers (parquet/csv/json) with Glue-style dataset semantics.
+"""Dataset writers (parquet/csv/json/orc) with Glue-style dataset semantics.
 
 Ref: /root/reference/awswrangler/s3/_write_parquet.py (``to_parquet``,
 ``store_parquet_metadata``), _write_text.py (``to_csv``, ``to_json``),
@@ -12,15 +12,19 @@ partition overwrite*, which is exactly Glue/Athena partition
 replacement. Single-file (non-dataset) writes exist for API parity
 but are a driver-side convenience — the dataset path is the one that
 scales.
+
+Catalog upkeep follows the reference: a write registers the partitions
+it wrote (learned from the write job through an Observation), never
+the whole table.
 """
 
 from __future__ import annotations
 
 import posixpath
 import uuid
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from aws_data_wrangler_spark._data_types import athena2spark, athena_types_from_spark
 from aws_data_wrangler_spark.exceptions import (
@@ -48,23 +52,50 @@ def _cast_dtype(df: DataFrame, dtype: Optional[Dict[str, str]]) -> DataFrame:
     return df.withColumns({col: F.col(col).cast(athena2spark(t)) for col, t in dtype.items()})
 
 
-def _partitions_values(
-    path: str, partition_cols: List[str], spark: SparkSession
+def _observe_partitions(df: DataFrame, partition_cols: List[str]) -> Tuple[DataFrame, Observation]:
+    """``df`` with an Observation that collects the partition-value tuples
+    it writes, cast to string as the writer casts them for directory
+    names. The metric is computed by the write job itself: no extra
+    Spark job, and no listing of what earlier writes left behind."""
+    from pyspark.sql import functions as F
+
+    observation = Observation()
+    touched = F.collect_set(F.struct(*[F.col(c).cast("string") for c in partition_cols]))
+    return df.observe(observation, touched.alias("partitions")), observation
+
+
+def _touched_partitions(
+    observation: Observation, partition_cols: List[str], spark: SparkSession
 ) -> Dict[str, List[str]]:
-    """{partition_dir_uri: [values...]} for the written dataset, mirroring
-    the reference's to_parquet return payload."""
+    """{directory under the root: its directory values} per partition the
+    observed write touched. Names come from the writer's own
+    ``ExternalCatalogUtils.getPartitionPathString``, so escaping matches
+    the disk and NULL and '' share the default-partition directory."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     out: Dict[str, List[str]] = {}
-    root = normalize_path(path).rstrip("/")
-    root_schemeless = root.split("://", 1)[-1]
-    for obj in list_objects(path, spark=spark):
-        # Hadoop renders file:/x, we normalize file:///x — compare scheme-less
-        obj_schemeless = obj.split(":", 1)[-1].lstrip("/")
-        rel = obj_schemeless[len(root_schemeless.lstrip("/")):].lstrip("/")
-        parts = rel.split("/")[:-1]
-        values = [p.split("=", 1)[1] for p in parts if "=" in p]
-        if len(values) == len(partition_cols) and values:
-            out[f"{root}/{'/'.join(parts)}/"] = values
+    for row in observation.get["partitions"]:
+        names = [utils.getPartitionPathString(c, v) for c, v in zip(partition_cols, row)]
+        out["/".join(names)] = [name.split("=", 1)[1] for name in names]
     return out
+
+
+def _data_files(spark: SparkSession, root: str, directories: List[str]) -> List[str]:
+    """Data files directly under each directory of ``root`` (``""`` is the
+    root itself): one ``listStatus`` per directory, hidden names
+    (``_SUCCESS``, ``.crc``) out. The FileSystem and child paths come
+    from a Hadoop ``Path``, which quotes what ``URI.create`` rejects
+    (spaces in partition values)."""
+    jvm = spark._jvm
+    root_path = jvm.org.apache.hadoop.fs.Path(root)
+    fs = root_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    out: List[str] = []
+    for directory in directories:
+        listed = jvm.org.apache.hadoop.fs.Path(root_path, directory) if directory else root_path
+        for status in fs.listStatus(listed):
+            uri = status.getPath().toString()
+            if status.isFile() and not uri.rsplit("/", 1)[-1].startswith(("_", ".")):
+                out.append(uri)
+    return sorted(out)
 
 
 def _write_single_file(df: DataFrame, path: str, fmt: str, spark: SparkSession, **options: Any) -> None:
@@ -177,7 +208,8 @@ def _write(
         return {"paths": [path], "partitions_values": {}}
 
     partition_cols = partition_cols or []
-    writer = df.write.format(fmt)
+    observed, observation = _observe_partitions(df, partition_cols) if partition_cols else (df, None)
+    writer = observed.write.format(fmt)
     for key, value in options.items():
         writer = writer.option(key, value)
     if partition_cols:
@@ -199,10 +231,11 @@ def _write(
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    paths = list_objects(path, spark=spark, suffix=None)
+    root = path.rstrip("/")
+    touched = _touched_partitions(observation, partition_cols, spark) if partition_cols else {}
     result: Dict[str, Any] = {
-        "paths": paths,
-        "partitions_values": _partitions_values(path, partition_cols, spark) if partition_cols else {},
+        "paths": _data_files(spark, root, list(touched) if partition_cols else [""]),
+        "partitions_values": {f"{root}/{d}/": values for d, values in touched.items()},
     }
     if database and table:
         from aws_data_wrangler_spark import catalog
@@ -221,8 +254,18 @@ def _write(
             columns_comments=columns_comments,
             spark=spark,
         )
-        if partition_cols:
-            catalog.repair_table_partitions(database=database, table=table, spark=spark)
+        # the spec value MSCK REPAIR would register for a directory
+        # value is its unescapePathName
+        unescape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+        catalog._add_partitions(
+            database, table, partition_cols,
+            {f"{root}/{d}": [unescape(v) for v in values] for d, values in touched.items()},
+            spark,
+        )
+        # ALTER TABLE refreshes the table itself, but a write that runs
+        # none (non-partitioned table, zero rows) would leave the
+        # table's cached file listing stale
+        spark.catalog.refreshTable(f"`{database}`.`{table}`")
     return result
 
 
@@ -276,6 +319,17 @@ def to_parquet(
     point-lookup complement to ``sort_cols``/Z-order at 100 TB.
     ``bloom_filter_ndv`` sizes the filters (expected distinct values
     per row group; the writer default otherwise).
+
+    Dataset writes return ``{"paths", "partitions_values"}`` for the
+    partitions THIS call wrote: ``partitions_values`` maps each written
+    partition directory to its values, ``paths`` lists the data files
+    in those directories (an append also finds the files earlier writes
+    left there). With ``database``/``table`` exactly those partitions
+    are registered, in one ``ALTER TABLE … ADD IF NOT EXISTS
+    PARTITION`` statement, and the table is refreshed; the cost does
+    not grow with the table's history. Writes no longer repair
+    partitions written some other way — use
+    ``catalog.repair_table_partitions`` for that.
     """
     _pop_noop_kwargs(options)
     options.setdefault("compression", compression or "none")
@@ -340,7 +394,10 @@ def to_csv(
     """Ref: /root/reference/awswrangler/s3/_write_text.py ``to_csv``.
 
     ``columns`` writes a subset; catalog-metadata kwargs as in
-    ``to_parquet``.
+    ``to_parquet``. ``paths``/``partitions_values`` cover the partitions
+    this call wrote, and only those are registered in the catalog;
+    partitions written some other way need
+    ``catalog.repair_table_partitions``.
     """
     _pop_noop_kwargs(options)
     options.setdefault("sep", sep)
@@ -371,7 +428,12 @@ def to_json(
     spark: Optional[SparkSession] = None,
     **options: Any,
 ) -> Dict[str, Any]:
-    """Ref: /root/reference/awswrangler/s3/_write_text.py ``to_json``."""
+    """Ref: awswrangler/s3/_write_text.py ``to_json``.
+
+    ``paths``/``partitions_values`` cover the partitions this call
+    wrote, and only those are registered in the catalog; partitions
+    written some other way need ``catalog.repair_table_partitions``.
+    """
     return _write(
         df, path, "json", dataset, partition_cols, mode, database, table, dtype, spark, **options
     )
@@ -481,6 +543,10 @@ def to_orc(
     declares ``timestamp`` — the parquet reader coerces that
     mismatch, the ORC reader refuses it (ORC_TYPE_CAST), so the cast
     must happen at write time. Pathless round-trips keep NTZ intact.
+
+    ``paths``/``partitions_values`` cover the partitions this call
+    wrote, and only those are registered in the catalog; partitions
+    written some other way need ``catalog.repair_table_partitions``.
     """
     _pop_noop_kwargs(options)
     if sanitize_columns:

@@ -250,3 +250,128 @@ class TestStatistics:
         assert int(stats["numRows"]) == 100
         assert int(stats["totalSize"]) > 0
         catalog.delete_database("sg_stats")
+
+
+# partition values that stress directory escaping and the DDL literal:
+# path separators, '=', '%', a space, a single quote, '' and NULL
+# (the last two share the default-partition directory on disk)
+_ODD_VALUES = ["a/b", "x=y", "p%q", "sp ace", "it's", "", None]
+
+
+def _odd_frame(spark, values, first_day):
+    import datetime
+
+    rows = [
+        (i, s, None if s == "p%q" else datetime.date(2024, 1, first_day + i))
+        for i, s in enumerate(values)
+    ]
+    return spark.createDataFrame(rows, "v int, s string, d date")
+
+
+class TestDatasetWriteRegistration:
+    """Dataset writes register only the partitions they wrote, with the
+    entries MSCK REPAIR would have made, and leave the table fresh."""
+
+    def test_registered_partitions_match_msck(self, spark, tmp_prefix):
+        db, out = "sg_reg_msck", f"{tmp_prefix}/odd"
+        writes = [
+            ("overwrite", _odd_frame(spark, _ODD_VALUES, 1)),
+            # new dates for every value, plus one row into an existing partition
+            ("append", _odd_frame(spark, _ODD_VALUES, 10).union(_odd_frame(spark, ["a/b"], 1))),
+            ("overwrite_partitions", _odd_frame(spark, _ODD_VALUES[2:], 1)),
+        ]
+        try:
+            for mode, df in writes:
+                res = s3.to_parquet(df, out, dataset=True, partition_cols=["s", "d"], mode=mode,
+                                    database=db, table="written")
+                assert res["partitions_values"]
+                catalog.create_table(db, "mirror", out, {"v": "int"},
+                                     {"s": "string", "d": "date"}, mode="overwrite")
+                catalog.repair_table_partitions(db, "mirror")
+                assert catalog.get_partitions(db, "written") == catalog.get_partitions(db, "mirror"), mode
+                written = sorted(map(tuple, spark.table(f"{db}.written").collect()), key=repr)
+                assert written == sorted(map(tuple, spark.table(f"{db}.mirror").collect()), key=repr)
+        finally:
+            catalog.delete_database(db)
+
+    def test_append_into_existing_partition_is_fresh(self, spark, tmp_prefix):
+        from pyspark.sql import functions as F
+
+        db = "sg_reg_fresh"
+
+        def count(sql):
+            return athena.read_sql_query(sql, database=db).collect()[0]["n"]
+
+        def month(m, n):
+            return spark.range(n).select(F.lit(m).alias("m"), "id")
+
+        try:
+            s3.to_parquet(month("a", 5).union(month("b", 5)), f"{tmp_prefix}/p", dataset=True,
+                          partition_cols=["m"], database=db, table="p")
+            s3.to_parquet(spark.range(5), f"{tmp_prefix}/np", dataset=True, database=db, table="np")
+            assert count("SELECT count(*) AS n FROM p WHERE m = 'a'") == 5
+            assert count("SELECT count(*) AS n FROM np") == 5
+            # no repair call between the append and the query; the
+            # non-partitioned table runs no ALTER TABLE, so only the
+            # write's own refresh keeps it fresh
+            s3.to_parquet(month("a", 3), f"{tmp_prefix}/p", dataset=True,
+                          partition_cols=["m"], database=db, table="p")
+            s3.to_parquet(spark.range(7), f"{tmp_prefix}/np", dataset=True, database=db, table="np")
+            assert count("SELECT count(*) AS n FROM p WHERE m = 'a'") == 8
+            assert count("SELECT count(*) AS n FROM np") == 12
+        finally:
+            catalog.delete_database(db)
+            spark.catalog.setCurrentDatabase("default")
+
+    def test_zero_row_write_returns_promptly(self, spark, tmp_prefix):
+        import threading
+
+        empty = _odd_frame(spark, _ODD_VALUES, 1).limit(0)
+        box = {}
+        worker = threading.Thread(
+            target=lambda: box.update(res=s3.to_parquet(
+                empty, f"{tmp_prefix}/empty", dataset=True, partition_cols=["s", "d"],
+                database="sg_reg_empty", table="t")),
+            daemon=True,
+        )
+        try:
+            worker.start()
+            worker.join(timeout=120)
+            assert not worker.is_alive(), "zero-row write blocked waiting on its observation"
+            assert box["res"]["partitions_values"] == {}
+            assert catalog.get_partitions("sg_reg_empty", "t") == {}
+        finally:
+            catalog.delete_database("sg_reg_empty")
+
+    def test_append_returns_only_touched_partitions(self, spark, lineitem, tmp_prefix):
+        from pyspark.sql import functions as F
+
+        out = f"{tmp_prefix}/li"
+        first = s3.to_parquet(lineitem, out, dataset=True, partition_cols=["l_returnflag"])
+        assert sorted(v for v, in first["partitions_values"].values()) == ["A", "N", "R"]
+        res = s3.to_parquet(lineitem.filter(F.col("l_returnflag") == "R"), out, dataset=True,
+                            partition_cols=["l_returnflag"], mode="append")
+        assert list(res["partitions_values"].values()) == [["R"]]
+        assert res["paths"] and all("/l_returnflag=R/" in p for p in res["paths"])
+
+    def test_each_write_is_one_spark_job(self, spark, tmp_prefix):
+        # 40 monthly appends take the table past the 32-directory point
+        # where listing it would fan out as Spark jobs; the write's own
+        # job must stay the only one
+        from pyspark.sql import functions as F
+
+        sc = spark.sparkContext
+        jobs = []
+        try:
+            for m in range(40):
+                df = spark.range(10).select(F.lit(f"2020-{m:02d}").alias("month"), "id")
+                sc.setJobGroup(f"sg-write-{m}", "to_parquet job count")
+                s3.to_parquet(df, f"{tmp_prefix}/months", dataset=True, partition_cols=["month"],
+                              database="sg_reg_jobs", table="t")
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"sg-write-{m}")))
+        finally:
+            sc.setJobGroup(None, None)
+            catalog.delete_database("sg_reg_jobs")
+        assert jobs == [1] * 40, jobs
+        assert len(s3.list_directories(f"{tmp_prefix}/months")) == 40

@@ -424,14 +424,16 @@ class TestDedup:
 
     def test_release_batch_state_covers_the_pair_miners(self, spark, documents):
         # the deferred r10 handle (VERDICT r10 #2): the shared
-        # _shingle_overlap core caches the shingle table; a loop mining
-        # pair tables must be able to release it per batch — persisted
+        # _shingle_overlap core caches the shingle table, and the MinHash
+        # miner caches shingles, band rows and candidates; a loop mining
+        # pair tables must be able to release them per batch — persisted
         # storage returns to the baseline after each release instead of
-        # growing one shingle cache per call
+        # growing caches per call
         docs = documents.limit(40)
         jsc = spark.sparkContext._jsc.sc()
         baseline = jsc.getPersistentRDDs().size()
-        for miner in (dedup.ngram_jaccard_pairs, dedup.containment_pairs):
+        for miner in (dedup.ngram_jaccard_pairs, dedup.containment_pairs,
+                      dedup.minhash_lsh_pairs):
             result = miner(docs, threshold=0.8, max_doc_frequency=1000)
             result.count()  # consume (populates the shingle cache)
             assert jsc.getPersistentRDDs().size() > baseline

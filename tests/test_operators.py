@@ -2135,6 +2135,93 @@ class TestSimilarity:
             similarity.ivf_topk(embeddings, embeddings.limit(1), metric="manhattan")
 
 
+@pytest.fixture(scope="module")
+def ann_plan_inputs(spark, tmp_path_factory):
+    """Seeds, queries, PQ codebooks and both partitioned indexes, built
+    once for the plan-shape pins below."""
+    from pyspark.sql import Window
+
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    seeds = (
+        emb.orderBy("vec_id").limit(16)
+        .withColumn("cid", F.row_number().over(Window.orderBy("vec_id")) - 1)
+        .select("cid", F.col("embedding").alias("cvec"))
+    )
+    root = tmp_path_factory.mktemp("ann_plans")
+    ivf_index, ivfpq_index = str(root / "ivf"), str(root / "ivfpq")
+    similarity.build_partitioned_ivf(emb, seeds, ivf_index, metric="cosine")
+    books = similarity.build_partitioned_ivfpq(emb, seeds, ivfpq_index, iterations=0)
+    return {
+        "emb": emb, "seeds": seeds, "queries": emb.filter("vec_id < 5"),
+        "books": books, "ivf_index": ivf_index, "ivfpq_index": ivfpq_index,
+    }
+
+
+_ANN_PLAN_CALLS = {
+    "cosine_topk": lambda s, a: similarity.cosine_topk(a["emb"], a["queries"]),
+    "metric_topk": lambda s, a: similarity.metric_topk(a["emb"], a["queries"]),
+    "lsh_topk": lambda s, a: similarity.lsh_topk(a["emb"], a["queries"]),
+    "sq8_topk": lambda s, a: similarity.sq8_topk(a["emb"], a["queries"]),
+    "pq_topk": lambda s, a: similarity.pq_topk(
+        a["emb"], a["queries"], codebooks=a["books"]
+    ),
+    "ivf_topk": lambda s, a: similarity.ivf_topk(
+        a["emb"], a["queries"], centroids=a["seeds"], metric="cosine"
+    ),
+    "ivfpq_topk": lambda s, a: similarity.ivfpq_topk(
+        a["emb"], a["queries"], centroids=a["seeds"], codebooks=a["books"]
+    ),
+    "ivf_partitioned_topk": lambda s, a: similarity.ivf_partitioned_topk(
+        s, a["ivf_index"], a["queries"], a["seeds"], metric="cosine"
+    ),
+    "ivfpq_partitioned_topk": lambda s, a: similarity.ivfpq_partitioned_topk(
+        s, a["ivfpq_index"], a["queries"], a["seeds"], a["books"]
+    ),
+    "assign_cells_flat": lambda s, a: similarity.assign_cells(a["emb"], a["seeds"]),
+    "assign_cells_two_level": lambda s, a: similarity.assign_cells(
+        a["emb"], a["seeds"], max_cells=8
+    ),
+    "semdedup": lambda s, a: dedup.semdedup(a["emb"], centroids=a["seeds"]),
+}
+
+# (exchanges, broadcast_hash_joins, sort_merge_joins, cartesian_products,
+#  broadcast_nested_loop_joins, partition_filters)
+_ANN_PLAN_SHAPES = {
+    "assign_cells_flat": (0, 0, 0, 0, 0, False),
+    "assign_cells_two_level": (0, 1, 0, 0, 0, False),
+    "cosine_topk": (1, 0, 0, 0, 1, False),
+    "ivf_partitioned_topk": (2, 1, 0, 0, 0, True),
+    "ivf_topk": (2, 1, 0, 0, 0, False),
+    "ivfpq_partitioned_topk": (2, 3, 0, 0, 0, True),
+    "ivfpq_topk": (1, 3, 0, 0, 0, False),
+    "lsh_topk": (2, 1, 0, 0, 0, False),
+    "metric_topk": (1, 0, 0, 0, 1, False),
+    "pq_topk": (1, 2, 0, 0, 1, False),
+    "semdedup": (1, 1, 0, 0, 0, False),
+    "sq8_topk": (1, 2, 0, 0, 1, False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ANN_PLAN_CALLS))
+def test_ann_plan_shapes_are_pinned(spark, ann_plan_inputs, name):
+    # the physical-plan shape of every ANN / SemDeDup tier: a refactor of
+    # the shared assignment, probe, rank or rescore steps must not add or
+    # drop a shuffle, change a join strategy or lose partition pruning
+    from aws_data_wrangler_spark.plans.audit import plan_summary
+
+    s = plan_summary(_ANN_PLAN_CALLS[name](spark, ann_plan_inputs))
+    got = tuple(
+        s[key] for key in (
+            "exchanges", "broadcast_hash_joins", "sort_merge_joins",
+            "cartesian_products", "broadcast_nested_loop_joins",
+            "partition_filters",
+        )
+    )
+    assert got == _ANN_PLAN_SHAPES[name], s["plan"]
+
+
 class TestSketches:
     def test_hll_tracks_exact_distinct(self, spark, events):
         """approx_count_distinct (HyperLogLog++) — the sketch path for

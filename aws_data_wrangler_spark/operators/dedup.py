@@ -43,7 +43,7 @@ from typing import NamedTuple, Optional, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aws_data_wrangler_spark.functions import trunc_digits
+from aws_data_wrangler_spark.functions import trunc_digits, vec_dot, vec_norm
 
 # sentinel: distinguishes "caller left the df-cap at its default" from an
 # explicit opt-in — the default cap is surfaced with a warning so callers
@@ -1454,105 +1454,6 @@ def embedding_near_dup_incremental(
     )
 
 
-def _two_level_assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-cell assignment for centroid tables too large for one
-    plan literal (> ~1e5 cells): the standard IVF two-level coarse
-    quantizer, kept corpus-shuffle-free end to end.
-
-    Level 1: ~√k super-centroids (a deterministic cid-ordered
-    subsample of the centroid table) ship as a nested-array literal;
-    each point picks its nearest super-cell inside a Project — zero
-    shuffle. Level 2: every centroid is assigned to its super-cell
-    the same way (centroid-table-sized work, trivial), grouped into
-    ONE row per super-cell carrying a cid-sorted children array; a
-    broadcast-hash equi-join on the super-cell id hands each point
-    exactly one children array (no fan-out), and the final argmax
-    happens in-array in the same Project. The only join is
-    broadcast-hash on a ≤√k-cardinality key; there is no n×k fan-out
-    and no corpus-keyed shuffle. nprobe=1, so points near super-cell
-    borders may land in a neighboring child cell — the standard IVF
-    coarse-assignment approximation (SemDeDup clusters are a pruning
-    device, not a deliverable).
-
-    Input (``__id``, ``__v``, ``__norm``); output adds ``__cell`` and
-    the truncated ``__ccos`` — the ``semdedup`` assignment contract.
-    """
-    from aws_data_wrangler_spark.operators import similarity as _sim
-
-    cents = centroids.select(
-        F.col("cid").cast("int").alias("cid"),
-        F.col("cvec").cast("array<double>").alias("cvec"),
-    )
-    n_cells = cents.count()
-    n_super = max(1, min(1024, int(n_cells ** 0.5) + 1))
-    sup_rows = cents.orderBy("cid").limit(n_super).collect()
-    sup_vecs = [[float(x) for x in r["cvec"]] for r in sup_rows]
-    # level 2 prep: children arrays per super-cell (centroid-sized job)
-    cnorm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("cvec"), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    ckeys = _sim.cell_key_array(F.col("cvec"), sup_vecs, metric="cosine", norm_expr=cnorm)
-    children = (
-        cents.withColumn(
-            "__scell",
-            F.array_position(ckeys, F.array_min(ckeys)).cast("int"),
-        )
-        .groupBy("__scell")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cid"), F.col("cvec")))
-            ).alias("__children")
-        )
-    )
-    pkeys = _sim.cell_key_array(
-        F.col("__v"), sup_vecs, metric="cosine", norm_expr=F.col("__norm")
-    )
-    assigned = (
-        points.withColumn(
-            "__scell", F.array_position(pkeys, F.array_min(pkeys)).cast("int")
-        )
-        # LEFT join: a degenerate point (null vector → null keys → null
-        # super-cell) keeps its row with null __cell/__ccos — the flat
-        # path's behavior (no within-cell pairs, implicitly kept) —
-        # instead of silently disappearing from the dedup verdicts
-        .join(F.broadcast(children), "__scell", "left")
-        .withColumn(
-            "__ckeys",
-            F.transform(
-                F.col("__children"),
-                lambda ch: -(
-                    F.aggregate(
-                        F.zip_with(F.col("__v"), ch["cvec"], lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda a, x: a + x,
-                    )
-                    / (
-                        F.col("__norm")
-                        * F.sqrt(
-                            F.aggregate(
-                                F.transform(ch["cvec"], lambda x: x * x),
-                                F.lit(0.0),
-                                lambda a, x: a + x,
-                            )
-                        )
-                    )
-                ),
-            ),
-        )
-        .withColumn(
-            "__cpos", F.array_position(F.col("__ckeys"), F.array_min(F.col("__ckeys"))).cast("int")
-        )
-        .select(
-            "__id", "__v", "__norm",
-            F.element_at(F.col("__children"), F.col("__cpos"))["cid"].alias("__cell"),
-            trunc_digits(-F.element_at(F.col("__ckeys"), F.col("__cpos"))).alias("__ccos"),
-        )
-    )
-    return assigned
-
-
 def semdedup(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1625,16 +1526,13 @@ def semdedup(
         import warnings
 
         warnings.warn(
-            f"num_clusters={num_clusters} > 1e5: the broadcast nested-loop "
-            "assignment costs O(n*k) dot products and a k-row broadcast — "
-            "prefer ~1e5 sample-trained centroids (see docstring).",
+            f"num_clusters={num_clusters} > 1e5: the flat assignment ships a "
+            "k×dim centroid literal in the plan and evaluates n×k cosine keys "
+            "— prefer ~1e5 sample-trained centroids (see docstring).",
             stacklevel=2,
         )
     vec = F.col(vec_col).cast("array<double>")
-    norm_expr = F.sqrt(
-        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    points = df.select(F.col(id_col).alias("__id"), vec.alias("__v"), norm_expr.alias("__norm"))
+    points = df.select(F.col(id_col).alias("__id"), vec.alias("__v"), vec_norm(vec).alias("__norm"))
     from pyspark.sql import Window
 
     from aws_data_wrangler_spark.operators import similarity as _sim
@@ -1652,45 +1550,29 @@ def semdedup(
     flat = cent_lists is not None and (
         len(cent_lists[0]) * (len(cent_lists[1][0]) if cent_lists[1] else 0) <= 4_000_000
     )
-    # cache: the assigned table backs BOTH renamed pair-join branches
-    # (toDF branches canonicalize to different exchanges — the known
-    # recompute trap) plus the verdict join
     if flat:
-        cent_ids, cent_vecs = cent_lists
-        keys = _sim.cell_key_array(
-            F.col("__v"), cent_vecs, metric="cosine", norm_expr=F.col("__norm")
-        )
-        assigned = (
-            points.withColumn("__keys", keys)
-            .withColumn(
-                "__pos",
-                F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"),
-            )
-            .select(
-                "__id", "__v", "__norm",
-                F.element_at(
-                    _sim._nested_lit(cent_ids, "array<int>"), F.col("__pos")
-                ).alias("__cell"),
-                trunc_digits(-F.element_at(F.col("__keys"), F.col("__pos"))).alias("__ccos"),
-            )
-            .cache()
+        assigned = _sim._nearest_cell(
+            points, F.col("__v"), *cent_lists, metric="cosine", norm=F.col("__norm")
         )
     else:
         if cent_lists is not None:
             centroids = df.sparkSession.createDataFrame(
                 list(zip(*cent_lists)), "cid int, cvec array<double>"
             )
-        assigned = _two_level_assign(points, centroids).cache()
+        assigned = _sim._two_level_assign(
+            points, F.col("__v"), F.col("__norm"), centroids, "cosine"
+        )
+    # cache: the assigned table backs BOTH renamed pair-join branches
+    # (toDF branches canonicalize to different exchanges — the known
+    # recompute trap) plus the verdict join
+    assigned = assigned.select(
+        "__id", "__v", "__norm",
+        F.col("cid").alias("__cell"),
+        trunc_digits(-F.col("key")).alias("__ccos"),
+    ).cache()
     a = assigned.toDF("id_a", "v_a", "norm_a", "cell", "ccos_a")
     b = assigned.toDF("id_b", "v_b", "norm_b", "cell", "ccos_b")
-    pair_cos = trunc_digits(
-        F.aggregate(
-            F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("norm_a") * F.col("norm_b"))
-    )
+    pair_cos = trunc_digits(vec_dot("v_a", "v_b") / (F.col("norm_a") * F.col("norm_b")))
     pairs = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))

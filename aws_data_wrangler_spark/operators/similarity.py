@@ -35,7 +35,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_data_wrangler_spark.functions import trunc_digits
+from aws_data_wrangler_spark.functions import trunc_digits, vec_dot, vec_norm
 
 # Shared Lloyd-iteration default for every inline k-means training path
 # (train_ivf_centroids, train_pq_codebooks, ivf_topk, ivfpq_topk) — one
@@ -50,20 +50,51 @@ def _with_norm(
     return df.select(
         F.col(id_col).alias(f"{prefix}_id"),
         vec.alias(f"{prefix}_vec"),
-        F.sqrt(
-            F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-        ).alias(f"{prefix}_norm"),
+        vec_norm(vec).alias(f"{prefix}_norm"),
         *[F.col(c) for c in keep],
     )
 
 
 def _cosine(a_vec: str, b_vec: str, a_norm: str, b_norm: str) -> "F.Column":
-    dot = F.aggregate(
-        F.zip_with(F.col(a_vec), F.col(b_vec), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return vec_dot(a_vec, b_vec) / (F.col(a_norm) * F.col(b_norm))
+
+
+def _rank_per_query(
+    scored: DataFrame, score: str, k: int, ascending: bool = False
+) -> DataFrame:
+    """The per-query top-k every tier ends with: (query_id, neighbor_id,
+    rank, <score>) — ``row_number`` over ``query_id`` ordered by
+    ``score`` (descending; ascending for distances), ties → lowest
+    neighbor_id."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    window = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(window))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
     )
-    return dot / (F.col(a_norm) * F.col(b_norm))
+
+
+def _exact_rescore(
+    shortlist: DataFrame, cv: DataFrame, q: DataFrame, k: int, dedupe: bool = False
+) -> DataFrame:
+    """Stage 2 of the quantized tiers: the (query_id, neighbor_id)
+    shortlist rescored with exact cosine against the full-precision
+    corpus ``cv`` (c_id, c_vec, c_norm) and the broadcast queries ``q``
+    (q_id, q_vec, q_norm), then the final top-k. ``dedupe`` collapses
+    pairs that duplicated index rows re-multiply through the join."""
+    rescored = (
+        shortlist.join(cv, F.col("neighbor_id") == F.col("c_id"))
+        .join(q, F.col("query_id") == F.col("q_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
+        )
+    )
+    if dedupe:
+        rescored = rescored.dropDuplicates(["query_id", "neighbor_id"])
+    return _rank_per_query(rescored, "cosine", k)
 
 
 def cosine_topk(
@@ -91,14 +122,7 @@ def cosine_topk(
             trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
         )
     )
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_per_query(scored, "cosine", k)
 
 
 def metric_topk(
@@ -138,19 +162,9 @@ def metric_topk(
         F.col(vec_col).cast("array<double>").alias("c_vec"),
     )
     if metric == "l2":
-        score = F.aggregate(
-            F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        order = [F.col("score").asc(), F.col("neighbor_id").asc()]
+        score = _l2_sq(F.col("q_vec"), F.col("c_vec"))
     else:
-        score = F.aggregate(
-            F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        order = [F.col("score").desc(), F.col("neighbor_id").asc()]
+        score = vec_dot("q_vec", "c_vec")
     scored = (
         c.crossJoin(q)
         .filter(F.col("q_id") != F.col("c_id"))
@@ -165,12 +179,7 @@ def metric_topk(
         # vector would occupy rank 1 of EVERY l2 query's top-k
         .filter(F.col("score").isNotNull())
     )
-    window = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _rank_per_query(scored, "score", k, ascending=metric == "l2")
 
 
 def cosine_topk_arrow(
@@ -230,14 +239,7 @@ def cosine_topk_arrow(
                 )
 
     scored = corpus.select(id_col, vec_col).mapInPandas(kernel, out_schema)
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_per_query(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -254,6 +256,12 @@ def cosine_topk_arrow(
 # partitionBy(row_id)``) shuffled n×k rows on a corpus-cardinality key
 # just to pick each row's argmin — at 100 TB with k=4096 cells that is
 # a 4096×-corpus shuffle inside what should be a map stage.
+#
+# Every assignment in the ANN and SemDeDup tiers goes through one of two
+# kernels: ``_nearest_cell`` (flat literal argmin) and
+# ``_two_level_assign`` (~√k super-cells through ``_nearest_cell``, then
+# one in-array child argmin). Ranking keys come from ``_cell_key``, the
+# one place a metric name is checked.
 # ---------------------------------------------------------------------------
 
 
@@ -301,10 +309,18 @@ def _l2_sq(vec_expr: "F.Column", cent: "F.Column") -> "F.Column":
     )
 
 
-def _dot_expr(vec_expr: "F.Column", cent: "F.Column") -> "F.Column":
-    return F.aggregate(
-        F.zip_with(vec_expr, cent, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
+def _cell_key(metric: str):
+    """The ranking key of a point against ONE centroid vector, as a
+    ``(vec, norm, cent) -> Column`` function (ascending = better):
+    squared-L2 distance, or negated cosine for ``metric='cosine'``
+    (negation is exact in IEEE doubles, so ``-key`` recovers the cosine
+    bit-for-bit). The one place a metric name is checked — an unknown
+    name raises here, while the plan is being built."""
+    if metric == "l2":
+        return lambda vec, norm, cent: _l2_sq(vec, cent)
+    if metric == "cosine":
+        return lambda vec, norm, cent: -(vec_dot(vec, cent) / (norm * vec_norm(cent)))
+    raise ValueError(f"metric must be 'l2' or 'cosine', got {metric!r}")
 
 
 def cell_key_array(
@@ -313,24 +329,103 @@ def cell_key_array(
     metric: str = "l2",
     norm_expr: Optional["F.Column"] = None,
 ) -> "F.Column":
-    """Per-cell ranking keys as ONE array column (ascending = better):
-    squared-L2 distances, or negated cosine for ``metric='cosine'``
-    (negation is exact in IEEE doubles, so ``-key`` recovers the
-    cosine bit-for-bit). One Literal + one ``transform`` — a pure
-    projection regardless of cell count."""
+    """Per-cell ranking keys as ONE array column (ascending = better;
+    the ``_cell_key`` convention). One Literal + one ``transform`` — a
+    pure projection regardless of cell count."""
+    key = _cell_key(metric)
     cents_lit = _nested_lit([[float(x) for x in v] for v in cent_vecs], "array<array<double>>")
-    if metric == "cosine":
+    return F.transform(cents_lit, lambda cv: key(vec_expr, norm_expr, cv))
 
-        def neg_cos(cv: "F.Column") -> "F.Column":
-            cnorm = F.sqrt(
-                F.aggregate(
-                    F.transform(cv, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-                )
-            )
-            return -(_dot_expr(vec_expr, cv) / (norm_expr * cnorm))
 
-        return F.transform(cents_lit, neg_cos)
-    return F.transform(cents_lit, lambda cv: _l2_sq(vec_expr, cv))
+def _argmin(keys: "F.Column") -> "F.Column":
+    """1-based position of the smallest key (first occurrence, so ties
+    → lowest position)."""
+    return F.array_position(keys, F.array_min(keys)).cast("int")
+
+
+def _nearest_cell(
+    df: DataFrame,
+    vec: "F.Column",
+    cent_ids: Sequence[int],
+    cent_vecs: Sequence[Sequence[float]],
+    metric: str = "l2",
+    norm: Optional["F.Column"] = None,
+) -> DataFrame:
+    """The flat nearest-cell kernel: ``df``'s columns plus ``__pos``
+    (the winning cell's 1-based position in the cid-sorted centroid
+    literal — the IVF+PQ residual indexes the centroid vectors with it),
+    ``cid`` and ``key``. Key array + argmin in one shuffle-free
+    Project; ties → lowest cid; a null vector gets null cid/key."""
+    keys = cell_key_array(vec, cent_vecs, metric=metric, norm_expr=norm)
+    return (
+        df.withColumn("__keys", keys)
+        .withColumn("__pos", _argmin(F.col("__keys")))
+        .select(
+            *df.columns,
+            "__pos",
+            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
+            F.element_at(F.col("__keys"), F.col("__pos")).alias("key"),
+        )
+    )
+
+
+def _two_level_assign(
+    df: DataFrame,
+    vec: "F.Column",
+    norm: "F.Column",
+    centroids: DataFrame,
+    metric: str,
+) -> DataFrame:
+    """The two-level nearest-cell kernel, for centroid tables too large
+    for one plan literal — the standard IVF coarse quantizer, kept
+    corpus-shuffle-free end to end: ``df``'s columns plus ``cid`` and
+    ``key``. Level 1 picks each point's nearest of ~√k super-cells (a
+    cid-ordered subsample) with ``_nearest_cell``; level 2 assigns
+    every centroid to its super-cell the same way (centroid-table-sized
+    work), groups them into one cid-sorted children array per
+    super-cell, and a broadcast-hash equi-join on the ≤√k-cardinality
+    super-cell key hands each point exactly one children array for the
+    in-array final argmin — no n×k fan-out, no corpus-keyed shuffle.
+    nprobe=1, so points near super-cell borders may land in a
+    neighboring child cell (the FAISS coarse-assignment approximation).
+    LEFT join: a degenerate point (null vector / all-NaN keys → null
+    super-cell) keeps a row with null cid/key — the flat kernel's
+    behavior — instead of silently disappearing."""
+    key = _cell_key(metric)
+    cents = centroids.select(
+        F.col("cid").cast("int").alias("cid"),
+        F.col("cvec").cast("array<double>").alias("cvec"),
+    )
+    n_cells = cents.count()
+    n_super = max(1, min(1024, int(n_cells ** 0.5) + 1))
+    sup_vecs = [
+        [float(x) for x in r["cvec"]]
+        for r in cents.orderBy("cid").limit(n_super).collect()
+    ]
+    # super-cell ids are their literal positions
+    sup_ids = list(range(1, len(sup_vecs) + 1))
+    children = (
+        _nearest_cell(
+            cents.select(F.struct("cid", "cvec").alias("__child")),
+            F.col("__child.cvec"), sup_ids, sup_vecs, metric, vec_norm("__child.cvec"),
+        )
+        .groupBy(F.col("cid").alias("__scell"))
+        .agg(F.array_sort(F.collect_list("__child")).alias("__children"))
+    )
+    return (
+        _nearest_cell(df, vec, sup_ids, sup_vecs, metric, norm)
+        .select(*df.columns, F.col("cid").alias("__scell"))
+        .join(F.broadcast(children), "__scell", "left")
+        .withColumn(
+            "__ckeys", F.transform(F.col("__children"), lambda ch: key(vec, norm, ch["cvec"]))
+        )
+        .withColumn("__cpos", _argmin(F.col("__ckeys")))
+        .select(
+            *df.columns,
+            F.element_at(F.col("__children"), F.col("__cpos"))["cid"].alias("cid"),
+            F.element_at(F.col("__ckeys"), F.col("__cpos")).alias("key"),
+        )
+    )
 
 
 def probe_cells(
@@ -348,6 +443,28 @@ def probe_cells(
         F.zip_with(keys, pos_lit, lambda d, p: F.struct(d.alias("k"), p.alias("p")))
     )
     return F.slice(ranked, 1, nprobe)
+
+
+def _probe(
+    q: DataFrame,
+    cent_ids: Sequence[int],
+    cent_vecs: Sequence[Sequence[float]],
+    nprobe: int,
+    metric: str = "l2",
+) -> DataFrame:
+    """Query-side probing shared by every IVF search: each (q_id,
+    q_vec, q_norm, ...) row once per probed cell, with ``cid`` and
+    ``__p`` (the cell's 1-based position in the centroid literal)."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe!r}")
+    keys = cell_key_array(F.col("q_vec"), cent_vecs, metric=metric, norm_expr=F.col("q_norm"))
+    return q.select(
+        *q.columns, F.explode(probe_cells(keys, len(cent_ids), nprobe)).alias("__pc")
+    ).select(
+        *q.columns,
+        F.col("__pc.p").alias("__p"),
+        F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
+    )
 
 
 def assign_cells(
@@ -373,113 +490,18 @@ def assign_cells(
     shuffle at ANY k (standard IVF nprobe=1 assignment, so cell borders
     are approximate in that regime, exactly as FAISS coarse assignment
     is)."""
+    _cell_key(metric)  # reject an unknown metric before the count job
+    vec = F.col(vec_col).cast("array<double>")
+    points = df.select(F.col(id_col), vec.alias("__v"), vec_norm(vec).alias("__norm"))
     n_cells = centroids.count()  # centroid tables are artifact-sized
     if n_cells > max_cells:
-        return _two_level_assign(df, centroids, id_col, vec_col, metric)
-    cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    vec = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    keys = cell_key_array(vec, cent_vecs, metric=metric, norm_expr=norm)
-    return (
-        df.select(F.col(id_col), keys.alias("__keys"))
-        .withColumn("__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"))
-        .select(
-            F.col(id_col),
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-            F.element_at(F.col("__keys"), F.col("__pos")).alias("key"),
+        assigned = _two_level_assign(points, F.col("__v"), F.col("__norm"), centroids, metric)
+    else:
+        cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
+        assigned = _nearest_cell(
+            points, F.col("__v"), cent_ids, cent_vecs, metric, F.col("__norm")
         )
-    )
-
-
-def _child_key(vec_expr: "F.Column", child_vec: "F.Column", metric: str, norm_expr) -> "F.Column":
-    """Ranking key of a point against ONE child centroid vector (same
-    convention as ``cell_key_array``: ascending = better)."""
-    if metric == "cosine":
-        cnorm = F.sqrt(
-            F.aggregate(
-                F.transform(child_vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-            )
-        )
-        return -(_dot_expr(vec_expr, child_vec) / (norm_expr * cnorm))
-    return _l2_sq(vec_expr, child_vec)
-
-
-def _two_level_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    metric: str,
-) -> DataFrame:
-    """``assign_cells`` for centroid tables too large for one plan
-    literal: the standard IVF two-level coarse quantizer, kept
-    corpus-shuffle-free end to end. Level 1 picks each point's nearest
-    of ~√k super-cells inside a Project (literal argmin); level 2
-    assigns every centroid to its super-cell the same way
-    (centroid-table-sized work), groups them into one cid-sorted
-    children array per super-cell, and a broadcast-hash equi-join on
-    the ≤√k-cardinality super-cell key hands each point exactly one
-    children array for the in-array final argmin. LEFT join: a
-    degenerate point (null vector / all-NaN keys → null super-cell)
-    keeps a row with null cid/key — the flat path's behavior — instead
-    of silently disappearing."""
-    cents = centroids.select(
-        F.col("cid").cast("int").alias("cid"),
-        F.col("cvec").cast("array<double>").alias("cvec"),
-    )
-    n_cells = cents.count()
-    n_super = max(1, min(1024, int(n_cells ** 0.5) + 1))
-    sup_rows = cents.orderBy("cid").limit(n_super).collect()
-    sup_vecs = [[float(x) for x in r["cvec"]] for r in sup_rows]
-    cnorm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("cvec"), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    ckeys = cell_key_array(F.col("cvec"), sup_vecs, metric=metric, norm_expr=cnorm)
-    children = (
-        cents.withColumn(
-            "__scell", F.array_position(ckeys, F.array_min(ckeys)).cast("int")
-        )
-        .groupBy("__scell")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cid"), F.col("cvec")))
-            ).alias("__children")
-        )
-    )
-    vec = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    points = df.select(F.col(id_col), vec.alias("__v"), norm.alias("__norm"))
-    pkeys = cell_key_array(
-        F.col("__v"), sup_vecs, metric=metric, norm_expr=F.col("__norm")
-    )
-    return (
-        points.withColumn(
-            "__scell", F.array_position(pkeys, F.array_min(pkeys)).cast("int")
-        )
-        .join(F.broadcast(children), "__scell", "left")
-        .withColumn(
-            "__ckeys",
-            F.transform(
-                F.col("__children"),
-                lambda ch: _child_key(F.col("__v"), ch["cvec"], metric, F.col("__norm")),
-            ),
-        )
-        .withColumn(
-            "__cpos",
-            F.array_position(F.col("__ckeys"), F.array_min(F.col("__ckeys"))).cast("int"),
-        )
-        .select(
-            F.col(id_col),
-            F.element_at(F.col("__children"), F.col("__cpos"))["cid"].alias("cid"),
-            F.element_at(F.col("__ckeys"), F.col("__cpos")).alias("key"),
-        )
-    )
+    return assigned.select(id_col, "cid", "key")
 
 
 def _hyperplanes(dim: int, num_planes: int, seed: int = 42) -> List[List[float]]:
@@ -551,12 +573,7 @@ def lsh_topk(
         F.col("c_id").alias("neighbor_id"),
         trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
     )
-    window = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_per_query(scored, "cosine", k)
 
 
 def quantize_embeddings(
@@ -637,33 +654,9 @@ def sq8_topk(
             (dot / (F.col("q_norm") * F.col("c_norm"))).alias("approx_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = _rank_per_query(approx, "approx_cosine", k * rescore_factor)
     # exact rescore: full-precision vectors for the shortlist only
-    cv = _with_norm(corpus, id_col, vec_col, "c")
-    rescored = (
-        shortlist.join(cv, shortlist.neighbor_id == cv.c_id)
-        .join(q, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _exact_rescore(shortlist, _with_norm(corpus, id_col, vec_col, "c"), q, k)
 
 
 def train_pq_codebooks(
@@ -730,6 +723,30 @@ def _books_lit(codebooks: List[List[List[float]]]) -> "F.Column":
     return _nested_lit(
         [[[float(x) for x in cent] for cent in book] for book in codebooks],
         "array<array<array<double>>>",
+    )
+
+
+def _pq_luts(codebooks: List[List[List[float]]]) -> "F.Column":
+    """A query's ADC lookup tables as ONE nested-array column: per
+    subspace, the q_vec subvector's dot product with every codebook
+    centroid (m × num_codes doubles, built from the single codebook
+    Literal)."""
+    sub = len(codebooks[0][0])
+    return F.transform(
+        _books_lit(codebooks),
+        lambda book, s: F.transform(
+            book, lambda cent: vec_dot(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
+        ),
+    )
+
+
+def _adc_dot() -> "F.Column":
+    """Asymmetric-distance dot product of a (codes, luts) row: ``m``
+    table lookups folded left to right."""
+    return F.aggregate(
+        F.zip_with(F.col("codes"), F.col("luts"), lambda c, lut: F.element_at(lut, c + 1)),
+        F.lit(0.0),
+        lambda a, x: a + x,
     )
 
 
@@ -812,24 +829,12 @@ def pq_topk(
         codebooks = train_pq_codebooks(
             corpus, m=m, num_codes=num_codes, id_col=id_col, vec_col=vec_col
         )
-    sub = len(codebooks[0][0])
     if encoded is None:
         encoded = pq_encode(corpus, codebooks, id_col, vec_col)
-    luts = F.transform(
-        _books_lit(codebooks),
-        lambda book, s: F.transform(
-            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
-        ),
-    )
     q = F.broadcast(
         _with_norm(queries, id_col, vec_col, "q").select(
-            "q_id", "q_norm", "q_vec", luts.alias("luts")
+            "q_id", "q_norm", "q_vec", _pq_luts(codebooks).alias("luts")
         )
-    )
-    approx_dot = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("luts"), lambda c, lut: F.element_at(lut, c + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
     )
     c = encoded.select(
         F.col(id_col).alias("c_id"), F.col("codes"), F.col("approx_norm")
@@ -840,35 +845,15 @@ def pq_topk(
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            (approx_dot / (F.col("q_norm") * F.col("approx_norm"))).alias("approx_cosine"),
+            (_adc_dot() / (F.col("q_norm") * F.col("approx_norm"))).alias("approx_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
-    cv = _with_norm(corpus, id_col, vec_col, "c")
-    q_plain = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
-    rescored = (
-        shortlist.join(cv, shortlist.neighbor_id == cv.c_id)
-        .join(q_plain, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    shortlist = _rank_per_query(approx, "approx_cosine", k * rescore_factor)
+    return _exact_rescore(
+        shortlist,
+        _with_norm(corpus, id_col, vec_col, "c"),
+        F.broadcast(_with_norm(queries, id_col, vec_col, "q")),
+        k,
     )
 
 
@@ -923,23 +908,9 @@ def ivfpq_topk(
         # max_cells explicitly, or pre-partition via assign_cells
         # (two-level) + build_partitioned_ivf instead
         cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
-    c = _with_norm(corpus, id_col, vec_col, "c")
     # zero-shuffle assignment: L2 key array + argmin in one Project,
     # carrying the residual + exact norm (ties → lowest cid)
-    keys_c = cell_key_array(F.col("c_vec"), cent_vecs)
-    assigned = (
-        c.withColumn("__keys", keys_c)
-        .withColumn("__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"))
-        .select(
-            "c_id",
-            "c_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-            F.zip_with(
-                F.col("c_vec"), F.element_at(cents_lit, F.col("__pos")), lambda x, y: x - y
-            ).alias("residual"),
-        )
-    )
+    assigned = _ivfpq_assigned(corpus, cent_ids, cent_vecs, id_col, vec_col)
     if codebooks is None:
         residuals = assigned.select(F.col("c_id").alias(id_col), F.col("residual").alias(vec_col))
         # cache: each of the m Lloyd loops actions this plan several
@@ -953,7 +924,6 @@ def ivfpq_topk(
         # table has no further consumer; release executor storage so
         # repeated calls in a long-lived session don't accumulate it
         residuals.unpersist()
-    sub = len(codebooks[0][0])
     # encode in the SAME projection chain that assigned: c_norm and
     # cid ride along, so no join (and no second pass) re-derives the
     # assignment for downstream consumers
@@ -963,70 +933,57 @@ def ivfpq_topk(
     ).select("c_id", "c_norm", "cid", "codes")
     # probe: top-nprobe cells per query by L2 (array-sort projection),
     # carrying q·centroid and the ADC LUTs as one nested-array column
-    q = _with_norm(queries, id_col, vec_col, "q")
-    luts = F.transform(
-        _books_lit(codebooks),
-        lambda book, s: F.transform(
-            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
-        ),
+    q_cells = _pq_probe(
+        _with_norm(queries, id_col, vec_col, "q"), cent_ids, cent_vecs, codebooks, nprobe
     )
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs)
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = F.broadcast(
-        q.select("q_id", "q_norm", "q_vec", F.explode(probed).alias("__pc"))
-        .select(
+    shortlist = _adc_shortlist(encoded, q_cells, k * rescore_factor)
+    return _exact_rescore(
+        shortlist,
+        _with_norm(corpus, id_col, vec_col, "c"),
+        F.broadcast(_with_norm(queries, id_col, vec_col, "q")),
+        k,
+    )
+
+
+def _pq_probe(q: DataFrame, cent_ids, cent_vecs, codebooks, nprobe: int) -> DataFrame:
+    """The broadcast probe table of the IVF+PQ searches: one row per
+    (query, probed cell) with q_id, q_norm, cid, the exact
+    query·centroid term ``q_dot_cent`` and the query's ADC ``luts``."""
+    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
+    return F.broadcast(
+        _probe(q, cent_ids, cent_vecs, nprobe).select(
             "q_id",
             "q_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
-            _dot_expr(F.col("q_vec"), F.element_at(cents_lit, F.col("__pc.p"))).alias(
-                "q_dot_cent"
-            ),
-            luts.alias("luts"),
+            "cid",
+            vec_dot(F.col("q_vec"), F.element_at(cents_lit, F.col("__p"))).alias("q_dot_cent"),
+            _pq_luts(codebooks).alias("luts"),
         )
     )
-    adc = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("luts"), lambda cd, lut: F.element_at(lut, cd + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+
+
+def _adc_shortlist(
+    codes: DataFrame, q_cells: DataFrame, n: int, dedupe: bool = False
+) -> DataFrame:
+    """Stage 1 of the IVF+PQ searches: a cell-keyed equi-join of the
+    code table (cid, c_id, c_norm, codes) against the ``_pq_probe``
+    table, the residual-ADC approximate cosine (q·centroid + ADC over
+    the exact corpus norm) and the top-``n`` shortlist per query.
+    ``dedupe`` collapses duplicated index rows, which score
+    identically, so one cannot take two shortlist slots."""
     approx = (
-        encoded.join(q_cells, "cid")
+        codes.join(q_cells, "cid")
         .filter((F.col("q_id") != F.col("c_id")) & (F.col("c_norm") > 0))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            ((F.col("q_dot_cent") + adc) / (F.col("q_norm") * F.col("c_norm"))).alias(
+            ((F.col("q_dot_cent") + _adc_dot()) / (F.col("q_norm") * F.col("c_norm"))).alias(
                 "approx_cosine"
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
-    cv = _with_norm(corpus, id_col, vec_col, "c")
-    q_plain = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
-    rescored = (
-        shortlist.join(cv, shortlist.neighbor_id == cv.c_id)
-        .join(q_plain, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    if dedupe:
+        approx = approx.dropDuplicates(["query_id", "neighbor_id"])
+    return _rank_per_query(approx, "approx_cosine", n)
 
 
 def train_ivf_centroids(
@@ -1094,13 +1051,10 @@ def _lloyd(
     one groupBy mean (one driver job; the collected means become the
     next round's literal). Empty cells drop out (FAISS behavior)."""
     for _ in range(iterations):
-        keys = cell_key_array(F.col("pvec"), cent_vecs)
-        pos = F.array_position(keys, F.array_min(keys)).cast("int")
-        cid = F.element_at(_nested_lit(cent_ids, "array<int>"), pos)
         # new centroid = per-cell mean, dimension-wise (one groupBy,
         # map-side partials; centroid table stays tiny)
         updated = (
-            points.select(cid.alias("cid"), "pvec")
+            _nearest_cell(points, F.col("pvec"), cent_ids, cent_vecs)
             .groupBy("cid")
             .agg(
                 F.array(
@@ -1149,8 +1103,7 @@ def ivf_topk(
     the cell assignment exactly). Final neighbor scores are exact
     cosine either way.
     """
-    if metric not in ("l2", "cosine"):
-        raise ValueError(f"metric must be 'l2' or 'cosine', got {metric!r}")
+    _cell_key(metric)  # reject an unknown metric before training
     if centroids is None:
         cent_ids, cent_vecs = _train_ivf_lists(
             corpus, num_centroids, iterations, id_col, vec_col
@@ -1159,28 +1112,24 @@ def ivf_topk(
         # past the flat-literal bound, raise max_cells explicitly or
         # use assign_cells (two-level) + build_partitioned_ivf
         cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    c = _with_norm(corpus, id_col, vec_col, "c")
-    q = _with_norm(queries, id_col, vec_col, "q")
-    keys_c = cell_key_array(F.col("c_vec"), cent_vecs, metric=metric, norm_expr=F.col("c_norm"))
-    c_cells = (
-        c.withColumn("__keys", keys_c)
-        .withColumn("__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"))
-        .select(
-            "c_id", "c_vec", "c_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-        )
+    c_cells = _nearest_cell(
+        _with_norm(corpus, id_col, vec_col, "c"),
+        F.col("c_vec"), cent_ids, cent_vecs, metric, F.col("c_norm"),
+    ).select("c_id", "c_vec", "c_norm", "cid")
+    q_cells = _probe(
+        _with_norm(queries, id_col, vec_col, "q"), cent_ids, cent_vecs, nprobe, metric
     )
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs, metric=metric, norm_expr=F.col("q_norm"))
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = (
-        q.select("q_id", "q_vec", "q_norm", F.explode(probed).alias("__pc"))
-        .select(
-            "q_id", "q_vec", "q_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
-        )
-    )
+    return _score_probed(c_cells, q_cells, k)
+
+
+def _score_probed(c: DataFrame, q_cells: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-k over the probed cells: the cell-keyed
+    equi-join of corpus rows (cid, c_id, c_vec, c_norm) against the
+    broadcast ``_probe`` table. A query probing several cells can meet
+    a neighbor once per cell (and a duplicated index row twice), so
+    pairs are deduplicated before ranking."""
     scored = (
-        c_cells.join(F.broadcast(q_cells), "cid")
+        c.join(F.broadcast(q_cells.drop("__p")), "cid")
         .filter(F.col("q_id") != F.col("c_id"))
         .select(
             F.col("q_id").alias("query_id"),
@@ -1189,12 +1138,7 @@ def ivf_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    window = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_per_query(scored, "cosine", k)
 
 
 def build_partitioned_ivf(
@@ -1236,6 +1180,7 @@ def build_partitioned_ivf(
     """
     from aws_data_wrangler_spark import s3
 
+    _cell_key(metric)  # reject an unknown metric before any job runs
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
     assigned = ivf_index_rows(
         corpus, cent_ids, cent_vecs, id_col=id_col, vec_col=vec_col,
@@ -1298,19 +1243,14 @@ def ivf_index_rows(
     _check_metadata_cols(metadata_cols, {id_col, vec_col, "vnorm", "cid"})
     meta = [F.col(c) for c in metadata_cols]
     c = _with_norm(corpus, id_col, vec_col, "c", keep=list(metadata_cols))
-    keys = cell_key_array(F.col("c_vec"), cent_vecs, metric=metric, norm_expr=F.col("c_norm"))
-    return (
-        c.withColumn("__keys", keys)
-        .withColumn(
-            "__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int")
-        )
-        .select(
-            F.col("c_id").alias(id_col),
-            F.col("c_vec").alias(vec_col),
-            F.col("c_norm").alias("vnorm"),
-            *meta,
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-        )
+    return _nearest_cell(
+        c, F.col("c_vec"), cent_ids, cent_vecs, metric, F.col("c_norm")
+    ).select(
+        F.col("c_id").alias(id_col),
+        F.col("c_vec").alias(vec_col),
+        F.col("c_norm").alias("vnorm"),
+        *meta,
+        "cid",
     )
 
 
@@ -1353,14 +1293,10 @@ def ivf_partitioned_topk(
     """
     from aws_data_wrangler_spark import s3
 
+    _cell_key(metric)  # reject an unknown metric before any job runs
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
-    q = _with_norm(queries, id_col, vec_col, "q")
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs, metric=metric, norm_expr=F.col("q_norm"))
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = q.select("q_id", "q_vec", "q_norm", F.explode(probed).alias("__pc")).select(
-        "q_id", "q_vec", "q_norm",
-        F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
+    q_cells = _probe(
+        _with_norm(queries, id_col, vec_col, "q"), cent_ids, cent_vecs, nprobe, metric
     )
     # the probed cell ids become scan-pruning literals: queries×nprobe
     # values, artifact-sized by contract (the query set is the small,
@@ -1382,24 +1318,7 @@ def ivf_partitioned_topk(
         F.col(vec_col).alias("c_vec"),
         F.col("vnorm").alias("c_norm"),
     )
-    scored = (
-        c.join(F.broadcast(q_cells), "cid")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _score_probed(c, q_cells, k)
 
 
 def build_partitioned_ivfpq(
@@ -1484,22 +1403,15 @@ def _ivfpq_assigned(
     and streaming ingest."""
     cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
     c = _with_norm(corpus, id_col, vec_col, "c", keep=list(metadata_cols))
-    keys_c = cell_key_array(F.col("c_vec"), cent_vecs)
-    return (
-        c.withColumn("__keys", keys_c)
-        .withColumn(
-            "__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int")
-        )
-        .select(
-            "c_id",
-            "c_vec",
-            "c_norm",
-            *[F.col(mc) for mc in metadata_cols],
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-            F.zip_with(
-                F.col("c_vec"), F.element_at(cents_lit, F.col("__pos")), lambda x, y: x - y
-            ).alias("residual"),
-        )
+    return _nearest_cell(c, F.col("c_vec"), cent_ids, cent_vecs).select(
+        "c_id",
+        "c_vec",
+        "c_norm",
+        *[F.col(mc) for mc in metadata_cols],
+        "cid",
+        F.zip_with(
+            F.col("c_vec"), F.element_at(cents_lit, F.col("__pos")), lambda x, y: x - y
+        ).alias("residual"),
     )
 
 
@@ -1633,6 +1545,7 @@ def rebalance_partitioned_index(
     from aws_data_wrangler_spark import s3
     from aws_data_wrangler_spark.s3._fs import does_object_exist
 
+    _cell_key(metric)  # reject an unknown metric before any job runs
     rows = _apply_tombstones(
         s3.read_parquet(index_path, dataset=True, spark=spark),
         load_tombstones(spark, index_path, id_col),
@@ -1805,28 +1718,8 @@ def ivfpq_partitioned_topk(
             f"{index_path.rstrip('/')}/_codebooks.json", spark=spark
         )
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
-    sub = len(codebooks[0][0])
-    q = _with_norm(queries, id_col, vec_col, "q")
-    luts = F.transform(
-        _books_lit(codebooks),
-        lambda book, s: F.transform(
-            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
-        ),
-    )
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs)
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = F.broadcast(
-        q.select("q_id", "q_norm", "q_vec", F.explode(probed).alias("__pc"))
-        .select(
-            "q_id",
-            "q_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
-            _dot_expr(F.col("q_vec"), F.element_at(cents_lit, F.col("__pc.p"))).alias(
-                "q_dot_cent"
-            ),
-            luts.alias("luts"),
-        )
+    q_cells = _pq_probe(
+        _with_norm(queries, id_col, vec_col, "q"), cent_ids, cent_vecs, codebooks, nprobe
     )
     # probed cell ids → scan-pruning literals (queries×nprobe values,
     # artifact-sized — the ivf_partitioned_topk contract)
@@ -1854,34 +1747,10 @@ def ivfpq_partitioned_topk(
             "codes",
         )
     )
-    adc = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("luts"), lambda cd, lut: F.element_at(lut, cd + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    approx = (
-        codes_scan.join(q_cells, "cid")
-        .filter((F.col("q_id") != F.col("c_id")) & (F.col("c_norm") > 0))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            ((F.col("q_dot_cent") + adc) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "approx_cosine"
-            ),
-        )
-        # crash-duplicated ingest rows (see index_ingest_sink) score
-        # identically — collapse them so a duplicate can't occupy two
-        # shortlist slots (the ivf_partitioned_topk contract)
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
+    # crash-duplicated ingest rows (see index_ingest_sink) score
+    # identically — collapse them so a duplicate can't occupy two
+    # shortlist slots (the ivf_partitioned_topk contract)
+    shortlist = _adc_shortlist(codes_scan, q_cells, k * rescore_factor, dedupe=True)
     # exact rescore: the vector column, probed cells only
     vec_scan = (
         s3.read_parquet(index_path, dataset=True, spark=spark)
@@ -1892,25 +1761,10 @@ def ivfpq_partitioned_topk(
             F.col("vnorm").alias("c_norm"),
         )
     )
-    q_plain = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
-    rescored = (
-        shortlist.join(vec_scan, shortlist.neighbor_id == vec_scan.c_id)
-        .join(q_plain, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-        # duplicated index rows re-multiply through the rescore join
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    # duplicated index rows re-multiply through the rescore join
+    return _exact_rescore(
+        shortlist, vec_scan, F.broadcast(_with_norm(queries, id_col, vec_col, "q")), k,
+        dedupe=True,
     )
 
 
@@ -2062,10 +1916,10 @@ def cell_occupancy(
     aggregate; every emitted float is a division of exact ints, so the
     diagnostic is bit-identical cross-engine.
     """
-    nlist = centroids.count()  # artifact-sized
     assigned = assign_cells(
         df, centroids, id_col=id_col, vec_col=vec_col, metric=metric, max_cells=max_cells
     )
+    nlist = centroids.count()  # artifact-sized
     per_cell = (
         assigned.filter(F.col("cid").isNotNull())
         .groupBy("cid")
@@ -2125,16 +1979,7 @@ def mmr_rerank(
     vecs = corpus.select(
         F.col(id_col).alias("__nid"),
         F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumn(
-        "__nrm",
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("__v"), lambda x: x * x),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        ),
-    )
+    ).withColumn("__nrm", vec_norm("__v"))
     cand = (
         candidates.select(
             "query_id",
@@ -2176,7 +2021,7 @@ def mmr_rerank(
         )
         if r == k:
             break
-        sim = _dot_expr(F.col("__v"), F.col("__sel_v")) / (
+        sim = vec_dot("__v", "__sel_v") / (
             F.col("__nrm") * F.col("__sel_nrm")
         )
         remaining = (
@@ -2359,5 +2204,5 @@ def pca_project(
     )
     return df.withColumn(
         out_col,
-        F.transform(comps_lit, lambda c: _dot_expr(centered, c)),
+        F.transform(comps_lit, lambda c: vec_dot(centered, c)),
     )

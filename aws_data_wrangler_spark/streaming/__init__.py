@@ -707,12 +707,17 @@ def index_ingest_sink(
     """
     from aws_data_wrangler_spark import s3
     from aws_data_wrangler_spark.operators.similarity import (
+        _cell_key,
         cluster_by_cell,
         collect_centroids,
         ivf_index_rows,
         ivfpq_index_rows,
     )
 
+    if pq_codebooks is None:
+        # fail before the stream starts: inside a micro-batch the error
+        # would surface only after the checkpoint was written
+        _cell_key(metric)
     spark = stream.sparkSession
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
     path = normalize_path(index_path)

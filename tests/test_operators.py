@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aws_data_wrangler_spark.operators import dedup, multimodal, similarity, text
+from aws_data_wrangler_spark.operators import dedup, multimodal, sampling, similarity, text
 
 
 class TestDedup:
@@ -280,7 +280,8 @@ class TestDedup:
         # replica of the documented two-level semantics exactly.
         import numpy as np
 
-        from aws_data_wrangler_spark.operators.dedup import _two_level_assign
+        from aws_data_wrangler_spark.functions import trunc_digits
+        from aws_data_wrangler_spark.operators.similarity import _two_level_assign
         from aws_data_wrangler_spark.plans.audit import plan_summary
 
         rng = np.random.RandomState(7)
@@ -298,7 +299,13 @@ class TestDedup:
             "__norm",
             F.sqrt(F.aggregate(F.transform("__v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)),
         )
-        out = _two_level_assign(pts, cents)
+        # semdedup's assignment: the shared two-level kernel under the
+        # cosine key, projected to (__cell, truncated __ccos)
+        out = _two_level_assign(
+            pts, F.col("__v"), F.col("__norm"), cents, "cosine"
+        ).select(
+            "__id", F.col("cid").alias("__cell"), trunc_digits(-F.col("key")).alias("__ccos")
+        )
         s = plan_summary(out)
         assert s["cartesian_products"] == 0, s["plan"]
         assert s["broadcast_nested_loop_joins"] == 0, s["plan"]
@@ -2136,14 +2143,12 @@ class TestSimilarity:
 
 
 @pytest.fixture(scope="module")
-def ann_plan_inputs(spark, tmp_path_factory):
+def ann_plan_inputs(spark, embeddings, tmp_path_factory):
     """Seeds, queries, PQ codebooks and both partitioned indexes, built
-    once for the plan-shape pins below."""
+    once for the ANN plan and argument tests below."""
     from pyspark.sql import Window
 
-    from conftest import SF_DIR
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    emb = embeddings
     seeds = (
         emb.orderBy("vec_id").limit(16)
         .withColumn("cid", F.row_number().over(Window.orderBy("vec_id")) - 1)
@@ -2220,6 +2225,93 @@ def test_ann_plan_shapes_are_pinned(spark, ann_plan_inputs, name):
         )
     )
     assert got == _ANN_PLAN_SHAPES[name], s["plan"]
+
+
+def _stream_ingest(spark, a, path, metric):
+    from aws_data_wrangler_spark import streaming
+
+    src = f"{path}_src"
+    a["emb"].limit(20).write.parquet(src)
+    stream = spark.readStream.schema(a["emb"].schema).parquet(src)
+    return lambda: streaming.index_ingest_sink(stream, a["seeds"], path, metric=metric)
+
+
+# each call returns a thunk; the thunk is what must raise
+_METRIC_CALLS = {
+    "assign_cells": lambda s, a, p, m: lambda: similarity.assign_cells(
+        a["emb"], a["seeds"], metric=m
+    ),
+    "assign_cells_two_level": lambda s, a, p, m: lambda: similarity.assign_cells(
+        a["emb"], a["seeds"], metric=m, max_cells=8
+    ),
+    "cell_occupancy": lambda s, a, p, m: lambda: similarity.cell_occupancy(
+        a["emb"], a["seeds"], metric=m
+    ),
+    "cluster_balanced_sample": lambda s, a, p, m: lambda: sampling.cluster_balanced_sample(
+        a["emb"], a["seeds"], per_cell=2, metric=m
+    ),
+    "ivf_topk": lambda s, a, p, m: lambda: similarity.ivf_topk(
+        a["emb"], a["queries"], metric=m
+    ),
+    "build_partitioned_ivf": lambda s, a, p, m: lambda: similarity.build_partitioned_ivf(
+        a["emb"], a["seeds"], p, metric=m
+    ),
+    "ivf_partitioned_topk": lambda s, a, p, m: lambda: similarity.ivf_partitioned_topk(
+        s, a["ivf_index"], a["queries"], a["seeds"], metric=m
+    ),
+    "rebalance_partitioned_index": lambda s, a, p, m: (
+        lambda: similarity.rebalance_partitioned_index(
+            s, a["ivf_index"], a["seeds"], p, metric=m
+        )
+    ),
+    "index_ingest_sink": _stream_ingest,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_METRIC_CALLS))
+def test_unknown_metric_is_rejected_before_any_job(spark, ann_plan_inputs, tmp_path, name):
+    # an unknown metric name used to mean L2: "cosin" built, searched or
+    # wrote an L2 index with no error. It must raise while the plan is
+    # built — before any Spark job runs and before any file is written.
+    import os
+    import uuid
+
+    out = str(tmp_path / "out")
+    call = _METRIC_CALLS[name](spark, ann_plan_inputs, out, "cosin")
+    sc = spark.sparkContext
+    group = f"metric-check-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "unknown metric")
+    try:
+        with pytest.raises(ValueError, match=r"'l2' or 'cosine'.*'cosin'"):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not os.path.exists(out)
+
+
+_NPROBE_CALLS = {
+    "ivf_topk": lambda s, a, n: similarity.ivf_topk(
+        a["emb"], a["queries"], nprobe=n, centroids=a["seeds"]
+    ),
+    "ivfpq_topk": lambda s, a, n: similarity.ivfpq_topk(
+        a["emb"], a["queries"], nprobe=n, centroids=a["seeds"], codebooks=a["books"]
+    ),
+    "ivf_partitioned_topk": lambda s, a, n: similarity.ivf_partitioned_topk(
+        s, a["ivf_index"], a["queries"], a["seeds"], nprobe=n, metric="cosine"
+    ),
+}
+
+
+@pytest.mark.parametrize("nprobe", [0, -1])
+@pytest.mark.parametrize("name", sorted(_NPROBE_CALLS))
+def test_nprobe_below_one_is_rejected(spark, ann_plan_inputs, name, nprobe):
+    # nprobe=0 used to return zero rows silently and nprobe=-1 failed on
+    # the executor inside slice(); both must raise a clear ValueError
+    # while the plan is built
+    with pytest.raises(ValueError, match="nprobe must be >= 1"):
+        _NPROBE_CALLS[name](spark, ann_plan_inputs, nprobe)
 
 
 class TestSketches:
